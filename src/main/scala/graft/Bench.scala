@@ -53,10 +53,10 @@ object Bench {
 
     // Box-state calibration unit (r14 verdict #2): one DISK_ONLY
     // corpus-move round-trip (read the documents corpus once,
-    // serialize it once through the block manager — GatePinProbe's
-    // unit), median-of-3 because the same move measured 2.7→5.4→2.7 s
-    // within an hour on this time-shared box. Published in the JSON
-    // line so a round-over-round headline delta on byte-identical code
+    // serialize it once through the block manager — the unit of
+    // GatePinProbe @ c5f0dcc), median-of-3 because the same move measured
+    // 2.7→5.4→2.7 s within an hour on this time-shared box. Published in the
+    // JSON line so a round-over-round headline delta on byte-identical code
     // is FALSIFIABLE: divide both rounds' headline by their own
     // calibration_sec before attributing a swing to the code.
     val calibrationSec = {

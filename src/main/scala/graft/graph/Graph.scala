@@ -158,7 +158,7 @@ object Graph {
     // r16: pin the caller's edge PLAN once — the degree aggregate below
     // used to read the RAW plan and re-executed the full co-occurrence
     // self-join (the r15 double-execution pattern, still live here:
-    // StageBreakdown measured two extra stages, ~25 s task time at
+    // StageBreakdown @ c5f0dcc measured two extra stages, ~25 s task time at
     // sf0.1, rebuilding+re-deduping the pair set just to count degrees)
     val ed = pinEdges(edges)
     // r16: the degree frame is the SAME aggregate triangleCountsPinned
@@ -383,7 +383,7 @@ object Graph {
     * 3×, kCore 6× (two semi-joins per round). Materialize ONCE,
     * pre-partitioned on the per-round join key so at scale only the
     * node-sized frame moves per round (the pageRank discipline, now
-    * uniform across the family). StageBreakdown before/after on
+    * uniform across the family). StageBreakdown @ c5f0dcc before/after on
     * q_copurchase_labelprop: three 23.9 MB edge-build stages → one.
     *
     * NO pre-repartition on the join key — measured (r15): under AQE,
@@ -416,7 +416,7 @@ object Graph {
     * the static planner — so each round's edges⋈state join planned as
     * a full two-sided shuffle, and even when AQE converted it to a
     * broadcast join at runtime the edge-side exchange had already been
-    * submitted: StageBreakdown on q_copurchase_pagerank measured a
+    * submitted: StageBreakdown @ c5f0dcc on q_copurchase_pagerank measured a
     * 22 MB edge shuffle WRITE per round (3.5 s of 16-task time/round)
     * for a 115 KB rank frame. With the explicit rung the edge
     * checkpoint scan fuses straight into the broadcast join + partial
@@ -440,8 +440,8 @@ object Graph {
   /** r16 rung: max ORIENTED edge count triangleCounts broadcasts into
     * the closure semi-join (16 B/row of longs — 10M edges ≈ 160 MB
     * built relation, the maxBroadcastNodes envelope). Default 0 = the
-    * shuffled closure: measured FASTER locally (TriangleClosureProbe —
-    * cache-resident partitioned builds beat a 1.2M-entry broadcast
+    * shuffled closure: measured FASTER locally (TriangleClosureProbe @ c5f0dcc
+    * — cache-resident partitioned builds beat a 1.2M-entry broadcast
     * probe map); raise on a cluster where the wedge exchange crosses
     * the network.
     */
@@ -496,7 +496,7 @@ object Graph {
     * Join rung: `maxBroadcastEdges` > 0 broadcasts the ORIENTED edge
     * list (16 B/row of longs) into BOTH the wedge join and the closure
     * semi-join — everything downstream of orientation goes map-side,
-    * zero wedge shuffle. Measured A/B (TriangleProfile, sf0.1, 49M
+    * zero wedge shuffle. Measured A/B (TriangleProfile @ c5f0dcc, sf0.1, 49M
     * wedges vs 1.2M oriented edges, same JVM): broadcast ~7.9 s vs
     * shuffle ~6.7 s typical — on a single box the wedge exchange is
     * memory-local and CHEAPER than the broadcast build, so the default
@@ -556,19 +556,19 @@ object Graph {
     // oriented edge side SHUFFLE_HASH — sort-merge was sorting the
     // 49M-row WEDGE side (measured 79 s task CPU / 478 MB exchange in
     // one stage at sf0.1) to join against 1.2M edges; the hash build
-    // on the edge side streams wedges unsorted. A/B (TriangleJoinProbe,
-    // interleaved ×3, identical output asserted): 8.43 → 6.38 s median.
-    // Cluster note: build memory per task = the edge partition's hash
-    // table (16 B/row + overhead); size spark.sql.shuffle.partitions so
-    // |E|/partitions fits the same way the broadcast rung sizes
-    // maxBroadcastEdges — the wedge side is the one that must never be
-    // the build, and the hint pins that choice.
+    // on the edge side streams wedges unsorted. A/B
+    // (TriangleJoinProbe @ c5f0dcc, interleaved ×3, identical output asserted):
+    // 8.43 → 6.38 s median. Cluster note: build memory per task = the edge
+    // partition's hash table (16 B/row + overhead); size
+    // spark.sql.shuffle.partitions so |E|/partitions fits the same way the
+    // broadcast rung sizes maxBroadcastEdges — the wedge side is the one that
+    // must never be the build, and the hint pins that choice.
     val nEdges = oriented.count()
     val edgeSide =
       if (maxBroadcastEdges > 0L && nEdges <= maxBroadcastEdges)
         broadcast(oriented)
       else oriented.hint("shuffle_hash")
-    // r16 MEASURED AND REJECTED locally (TriangleClosureProbe,
+    // r16 MEASURED AND REJECTED locally (TriangleClosureProbe @ c5f0dcc,
     // interleaved ×5, identity-asserted): broadcasting the EDGE side of
     // the closure semi-join removes the wedge exchange (542 MB at
     // sf0.1, keyed (a,c) — a key the wedge join cannot satisfy) but
@@ -586,7 +586,7 @@ object Graph {
       if (cap > 0L && nEdges <= cap) broadcast(oriented)
       else edgeSide
     }
-    // r16 MEASURED AND REJECTED (TriangleWidthProbe, interleaved ×7
+    // r16 MEASURED AND REJECTED (TriangleWidthProbe @ c5f0dcc, interleaved ×7
     // alternating order, identity-asserted): pinning the wedge join's
     // stream leg at planner width (the amplification-blind-spot width
     // pin — AQE coalesces the ~11 MB inputs to half the cores while the

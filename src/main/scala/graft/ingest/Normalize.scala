@@ -42,7 +42,8 @@ import SchemaDetector.{Detection, LatLon, LocId}
   *
   * Location canonicalization (our pinned formatting spec — SURVEY §7.4):
   *  - integer/decimal location IDs cast via LONG then STRING ("132",
-  *    never pandas' "132.0"); strings pass through.
+  *    never pandas' "132.0"); a NaN id becomes NULL; strings pass
+  *    through.
   *  - lat/lon pairs → `round(lat,3) <"_"> round(lon,3)` with
   *    format_number-free plain casts, e.g. "40.721_-74.005".
   *  - no location column → empty string (pivot_all_files.py:120-122).
@@ -55,13 +56,9 @@ object Normalize {
     * may differ in their other columns) and as the grouping key (same
     * detection + same physical types ⇒ one multi-path scan).
     */
-  final case class Dialect(detection: Detection, required: StructType) {
-    def dtType: DataType = required(detection.dtCol).dataType
-  }
+  final case class Dialect(detection: Detection, required: StructType)
 
   final case class Skipped(path: String, reason: String)
-
-  final case class NormalizeResult(trips: Option[DataFrame], skipped: Seq[Skipped])
 
   /** Uniform path key used to join per-file metadata onto rows:
     * scheme + slash-run differences between Hadoop listings
@@ -99,6 +96,9 @@ object Normalize {
     det.location match {
       case LocId(name) =>
         schema(name).dataType match {
+          // a NaN id is a missing location, not a cast overflow
+          case _: FloatType | _: DoubleType =>
+            when(!isnan(col(name)), col(name).cast(LongType).cast(StringType))
           case _: NumericType => col(name).cast(LongType).cast(StringType)
           case _ => col(name).cast(StringType)
         }
@@ -131,9 +131,6 @@ object Normalize {
     df.select(base ++ src ++ consts: _*)
   }
 
-  /** Detect every file's dialect (driver-side footer reads), group by
-    * dialect, scan each group once, union by name.
-    */
   /** Detect every file's dialect. Footer reads are driver-side but
     * independent — run them on a bounded pool. They go through
     * `Footers.schemaOf` (direct parquet-hadoop footer read, ~10 ms),
@@ -177,14 +174,5 @@ object Normalize {
       finally pool.shutdown()
     (detected.collect { case Right(x) => x },
       detected.collect { case Left(s) => s })
-  }
-
-  def normalizedTrips(spark: SparkSession, files: Seq[String]): NormalizeResult = {
-    val (ok, skipped) = detectDialects(spark, files)
-    val groups = ok.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-      .sortBy(_._2.head) // deterministic group order
-    val dfs = groups.map { case (dialect, paths) => readDialect(spark, dialect, paths) }
-    val unioned = dfs.reduceOption(_.unionByName(_))
-    NormalizeResult(unioned, skipped)
   }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * inside the lookback, never corpus-wide — and ONE final partial-agg
   * shuffle on touch type. No global sort, no driver collection.
   *
-  * SKEW LAW (AttributionProbe, 50M events, one 2%-of-traffic bot): an
+  * SKEW LAW (AttributionProbe @ c5f0dcc, 50M events, one 2%-of-traffic bot): an
   * inequality predicate does NOT bound a join's cost unless it is in
   * the EQUI-KEY. A user-only key hash-joins the bot's |convs| ×
   * |touches| pairs through one partition BEFORE the lookback filter
@@ -44,7 +44,7 @@ object Attribution {
     * The join key is (user, TIME BUCKET), not user alone — the
     * IntervalJoin grid pattern. A user-only key funnels a bot user's
     * |convs| × |touches| pair evaluations through ONE partition
-    * BEFORE the time filter can discard anything: AttributionProbe
+    * BEFORE the time filter can discard anything: AttributionProbe @ c5f0dcc
     * measured 1408 s at 50M events with one 2%-of-traffic bot on the
     * user-keyed shape (and the 7-day leg had to be killed). Bucket
     * width = the lookback, so each conversion subscribes to exactly
@@ -74,11 +74,11 @@ object Attribution {
     * activity SPANS many lookback-width buckets, but a bot whose whole
     * burst sits INSIDE one bucket degenerates back to the user-only
     * hot-key regime — one (user, bucket) key carries that burst's
-    * |convs| × |touches| pairs through one partition (AttributionProbe
-    * burst mode measures it). With saltFactor = S the TOUCH side adds
-    * salt = hash(touch id) mod S to the key and the (rare) conversion
-    * side replicates to all S salts, so every pair still meets exactly
-    * once and the hot key's pair evaluations spread across S
+    * |convs| × |touches| pairs through one partition
+    * (AttributionProbe @ c5f0dcc burst mode measures it). With saltFactor = S
+    * the TOUCH side adds salt = hash(touch id) mod S to the key and the (rare)
+    * conversion side replicates to all S salts, so every pair still meets
+    * exactly once and the hot key's pair evaluations spread across S
     * partitions. Output is byte-identical (probe + spec assert it);
     * cost is S× the conversion-slice exchange, which is the thin
     * slice by construction. Keep 1 unless bursty bots are expected.

@@ -19,7 +19,7 @@ object Combine {
   val indexCols: Seq[String] = Seq("taxi_type", "date", "pickup_place")
 
   /** Union wide tables by name (missing hour columns → 0) and re-sum. */
-  def combineWideTables(tables: Seq[DataFrame], minRides: Option[Long] = None): Option[DataFrame] =
+  def combineWideTables(tables: Seq[DataFrame]): Option[DataFrame] =
     tables.reduceOption(_.unionByName(_, allowMissingColumns = true))
       .map { all =>
         // hour columns absent from EVERY input still must exist (the
@@ -28,15 +28,10 @@ object Combine {
           if (df.columns.contains(c)) df else df.withColumn(c, lit(0L))
         }
         val filled = padded.na.fill(0L, HourPivot.hourCols)
-        val summed = filled
+        filled
           .groupBy(indexCols.map(col): _*)
           .agg(
             sum(col(HourPivot.hourCols.head)).as(HourPivot.hourCols.head),
             HourPivot.hourCols.tail.map(c => sum(col(c)).as(c)): _*)
-        minRides match {
-          case Some(t) => summed.where(
-            HourPivot.hourCols.map(col).reduce(_ + _) >= t)
-          case None => summed
-        }
       }
 }

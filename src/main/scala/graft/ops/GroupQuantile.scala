@@ -39,7 +39,7 @@ object GroupQuantile {
     *
     * TWO-CONSUMER caveat: `df` feeds both the threshold aggregate and
     * the filter join-back, so an EXPENSIVE `value` expression
-    * evaluates twice. MEASURED (CurationProbe three-way A/B, 5M wide
+    * evaluates twice. MEASURED (CurationProbe @ c5f0dcc three-way A/B, 5M wide
     * text docs, quiet box): the double eval is the thing to BEAT, not
     * an obvious bug — unpinned 949.9 s < fat pin (persist the scored
     * corpus) 1,017.7 s < narrow (id, group, score) pin + left-semi
@@ -49,7 +49,7 @@ object GroupQuantile {
     * than the recompute they save — and at a high keep rate the
     * semi-join moves the whole corpus to drop a sliver.
     *
-    * The LOW-KEEP regime is now measured too (GatePinProbe, r14 — the
+    * The LOW-KEEP regime is now measured too (GatePinProbe @ c5f0dcc, r14 — the
     * cell the r12 law prescribed without evidence): at p = 0.99 (keep
     * ~1%, 2M wide docs) the ordering INVERTS — narrow (id, group,
     * score) pin + join-back 23.9 s < fat pin 25.7 s < unpinned 81.8 s
@@ -64,7 +64,7 @@ object GroupQuantile {
     * rate → let the score evaluate twice, every materialization
     * "fix" pays more corpus movement than it saves.
     *
-    * Measurement footnote (GatePinDiag): keep hot-path score
+    * Measurement footnote (GatePinDiag @ c5f0dcc): keep hot-path score
     * expressions CODEGEN-ABLE. A higher-order-function lambda scorer
     * evaluated at 0.3 s or 9–10 s for the SAME plan depending on where
     * in the session it ran (reproducible) — interpreted HOF cost is

@@ -59,7 +59,7 @@ object NegativeSampling {
     val score: Column =
       -conv(substring(draw, 1, 13), 16, 10).cast("double")
     // fanOut: |pool| md5 draws per anchor is the expensive stage; a
-    // single-split anchor file serializes it (AmplificationAudit)
+    // single-split anchor file serializes it (AmplificationAudit @ c5f0dcc)
     val anchors = Partitioning.fanOut(
       df.select(col(idCol).cast("long").as("anchor_id")))
     // rung decision: skip the corpus-sized approx-count job entirely

@@ -94,9 +94,9 @@ object Profiling {
     * The counts frame is pinned (it is |keys|-sized — cheap) because
     * FIVE passes consume it: the lean rank's count/sample/bucket-count
     * jobs plus the totals and final folds. Unpinned, each pass would
-    * recompute the corpus-sized count aggregation upstream — SkewProbe
-    * measured 15.1 s vs 4.5 s at 50M events / 615k keys on exactly
-    * that mistake.
+    * recompute the corpus-sized count aggregation upstream —
+    * SkewProbe @ c5f0dcc measured 15.1 s vs 4.5 s at 50M events / 615k keys on
+    * exactly that mistake.
     */
   def keySkewAuditFromCounts(counts0: DataFrame): DataFrame = {
     val counts = counts0.persist(
@@ -241,7 +241,7 @@ object Profiling {
     * the wall grows linearly in the domain as the single-task window
     * sort takes over, reaching 27× the floor at all-distinct on a
     * 20M-row group while ksDriftBucketed holds the floor on the same
-    * input (tools/KsDomainProbe; SCALE_NOTES "domain cap is now a
+    * input (KsDomainProbe @ c5f0dcc; SCALE_NOTES "domain cap is now a
     * measured boundary").
     */
   val DefaultKsDomainCap: Long = 1L << 20

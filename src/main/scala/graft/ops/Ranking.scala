@@ -29,8 +29,8 @@ object Ranking {
 
   /** Pinned variant: materializes the ranged frame once so the offsets
     * pass and the rank pass see the SAME sampled range boundaries.
-    * Round-10 RankProbe (50M rows, warm): persist(DISK_ONLY) 16.1-16.9 s
-    * vs localCheckpoint 22.2-23.6 s — the checkpoint stored fat
+    * Round-10 RankProbe @ c5f0dcc (50M rows, warm): persist(DISK_ONLY)
+    * 16.1-16.9 s vs localCheckpoint 22.2-23.6 s — the checkpoint stored fat
     * deserialized rows; DISK_ONLY stores the serialized columnar form.
     * Recompute safety is unchanged: the persisted InMemoryRelation pins
     * ONE physical RDD, so a lost block recomputes through the SAME
@@ -71,7 +71,7 @@ object Ranking {
     * wide table) + the final rank pass (one shuffle on the bucket id).
     * The pinned variant instead WRITES the full-width frame once —
     * at the 100 TB tier the lean passes win whenever the sort key is
-    * a narrow slice of the row. RankProbe 50M warm: 10.0 s lean vs
+    * a narrow slice of the row. RankProbe @ c5f0dcc 50M warm: 10.0 s lean vs
     * 16.5 s pinned vs 22.5 s round-9 localCheckpoint.
     *
     * Rank values are IDENTICAL to globalRank (the total order alone

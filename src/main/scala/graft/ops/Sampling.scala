@@ -183,7 +183,7 @@ object Sampling {
     // (source, 256-bucket) — corpus/(sources·256) rows per sort, full
     // cluster parallelism. (A fully-kept-bucket fast path that skips
     // the window for non-boundary buckets measured SLOWER at 1M docs —
-    // it reads the joined frame twice; TokenBudgetProbe.)
+    // it reads the joined frame twice; TokenBudgetProbe @ c5f0dcc.)
     val wIn = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__src"), col("__b")).orderBy(col("__dg"), key)
       .rowsBetween(

@@ -174,7 +174,7 @@ object SnapshotDiff {
     *    the BUCKET column they prune whole buckets: the dim-fanout leg
     *    reads only |ΔB|'s buckets of A2 and B2
     *    (`SelectedBucketsCount: x out of n`), so delta-apply cost
-    *    scales with |Δ|, not |A| (JoinViewProbe's bucketed rung).
+    *    scales with |Δ|, not |A| (bucketed rung of JoinViewProbe @ c5f0dcc).
     *
     * Null fkCol rows never join (inner-join orphan semantics) but must
     * stay in the untouched leg exactly as the anti-join version keeps

@@ -92,12 +92,7 @@ object WideTablePipeline {
       maxConstGroups: Int = maxConstantScanGroups): Option[Planned] = {
     import spark.implicits._
 
-    val t0 = System.nanoTime()
-    def mark(name: String): Unit =
-      if (sys.env.contains("GRAFT_PIPELINE_DEBUG"))
-        System.err.println(f"[plan] $name at ${(System.nanoTime() - t0) / 1e9}%.2f s")
     val (ok, skippedDet) = Normalize.detectDialects(spark, files)
-    mark("detected")
     val metaOf = files.map(f => f -> PathMeta.fileMeta(f)).toMap
     val combos = ok
       .groupBy { case (dia, f) =>
@@ -156,9 +151,7 @@ object WideTablePipeline {
         Some(trips.join(broadcast(meta), Seq("src_path")))
       }
 
-    mark("scans built")
-    val result = Normalize.NormalizeResult(tripsOpt, skippedDet)
-    result.trips.map { trips =>
+    tripsOpt.map { trips =>
       val coerced = trips
         .where(col("pickup_datetime").isNotNull) // errors="coerce" + dropna
 
@@ -178,20 +171,36 @@ object WideTablePipeline {
         .select(("taxi_type" +: "date" +: "pickup_place" +:
           HourPivot.hourCols).map(col): _*)
 
-      val groups = Observation("groups")
-      val withGroupCount = pivoted.observe(groups, count(lit(1)).as("n_groups"))
-
-      val survivors = Observation("survivors")
-      val wide = withGroupCount
-        .where(HourPivot.hourCols.map(col).reduce(_ + _) >= minRides)
-        // post-filter row count rides the write job — saves the
-        // re-read-and-count pass over the output
-        .observe(survivors, count(lit(1)).as("n_out"))
-
+      val (wide, groups, survivors) = minRidesFilter(pivoted, minRides)
       Planned(wide, quality, groups, survivors,
-        result.skipped.map(s => (s.path, s.reason)))
+        skippedDet.map(s => (s.path, s.reason)))
     }
   }
+
+  /** Min-rides filter with the pre-filter group count and the
+    * post-filter row count as observe()s: both ride the write job, so
+    * no pass re-reads or re-counts the output.
+    */
+  private def minRidesFilter(wide: DataFrame, minRides: Long)
+      : (DataFrame, Observation, Observation) = {
+    val groups = Observation("groups")
+    val survivors = Observation("survivors")
+    val filtered = wide
+      .observe(groups, count(lit(1)).as("n_groups"))
+      .where(HourPivot.hourCols.map(col).reduce(_ + _) >= minRides)
+      .observe(survivors, count(lit(1)).as("n_out"))
+    (filtered, groups, survivors)
+  }
+
+  /** An observed count, 0 when absent: no observation row arrives when
+    * no row reached the observe (e.g. a month of zero-row files), and a
+    * sum over zero rows is null.
+    */
+  private def observedCount(o: Observation, key: String): Long =
+    o.get.get(key) match {
+      case Some(x: Long) => x
+      case _ => 0L
+    }
 
   /** Incremental/per-month mode: process each (year, month) file group
     * as its own plan writing `monthly/<yyyy>-<mm>`, then Combine the
@@ -208,19 +217,15 @@ object WideTablePipeline {
     val byMonth = files.groupBy(f =>
       PathMeta.monthFromPath(f).getOrElse((0, 0))).toSeq.sortBy(_._1)
 
-    var inputRows = 0L; var mismatch = 0L; var groups = 0L
+    var inputRows = 0L; var mismatch = 0L
     val skipped = Seq.newBuilder[(String, String)]
     val monthDirs = byMonth.flatMap { case ((y, m), monthFiles) =>
       plan(spark, monthFiles, minRides = 0L) match { // filter AFTER combine
         case Some(p) =>
           val dir = f"${cfg.outputDir}/monthly/$y%04d-$m%02d"
           p.wide.write.mode("overwrite").parquet(dir)
-          val q = p.quality.get
-          inputRows += q("input_rows").asInstanceOf[Long]
-          mismatch += (q("month_mismatch") match {
-            case null => 0L; case x => x.asInstanceOf[Long]
-          })
-          groups += p.groups.get("n_groups").asInstanceOf[Long]
+          inputRows += observedCount(p.quality, "input_rows")
+          mismatch += observedCount(p.quality, "month_mismatch")
           skipped ++= p.skipped
           Some(dir)
         case None =>
@@ -229,22 +234,19 @@ object WideTablePipeline {
       }
     }
 
+    // one combine pass: the pre-filter group count is taken on the
+    // combined table (months may share dates, so per-month group counts
+    // do not add up to it), then min-rides filters and the write runs
     val outPath = s"${cfg.outputDir}/wide_table.parquet"
-    val monthly = monthDirs.map(spark.read.parquet(_))
-    val outputRows = graft.ops.Combine
-      .combineWideTables(monthly, minRides = Some(cfg.minRides)) match {
+    val (preFilter, outputRows) = graft.ops.Combine
+      .combineWideTables(monthDirs.map(spark.read.parquet(_))) match {
       case Some(combined) =>
-        val out = if (cfg.singleFileOutput) combined.coalesce(1) else combined
+        val (wide, groups, survivors) = minRidesFilter(combined, cfg.minRides)
+        val out = if (cfg.singleFileOutput) wide.coalesce(1) else wide
         out.write.mode("overwrite").parquet(outPath)
-        spark.read.parquet(outPath).count()
-      case None => 0L
+        (observedCount(groups, "n_groups"), observedCount(survivors, "n_out"))
+      case None => (0L, 0L)
     }
-    // dropped = pre-filter groups minus survivors (group keys are
-    // disjoint across months only if months don't share dates; the
-    // combine may merge, so recount the combined pre-filter groups)
-    val preFilter = graft.ops.Combine
-      .combineWideTables(monthDirs.map(spark.read.parquet(_)))
-      .map(_.count()).getOrElse(0L)
     val dropped = preFilter - outputRows
     val report = Report(inputRows, outputRows, mismatch, dropped,
       mismatch + dropped, skipped.result(), (System.nanoTime() - t0) / 1e9,
@@ -274,22 +276,12 @@ object WideTablePipeline {
         val skipped = files.map(f => (f, "undetectable or unreadable"))
         Report(0L, 0L, 0L, 0L, 0L, skipped, 0.0)
       case Some(p) =>
-        def mark(name: String): Unit =
-          if (sys.env.contains("GRAFT_PIPELINE_DEBUG"))
-            System.err.println(f"[pipeline] $name at ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        mark("planned")
         val out = if (cfg.singleFileOutput) p.wide.coalesce(1) else p.wide
         out.write.mode("overwrite").parquet(outPath)
-        mark("written")
-        val outputRows = p.survivors.get("n_out").asInstanceOf[Long]
-        val q = p.quality.get
-        val inputRows = q("input_rows").asInstanceOf[Long]
-        val mismatch = q("month_mismatch") match {
-          case null => 0L
-          case x => x.asInstanceOf[Long]
-        }
-        val nGroups = p.groups.get("n_groups").asInstanceOf[Long]
-        val dropped = nGroups - outputRows
+        val inputRows = observedCount(p.quality, "input_rows")
+        val outputRows = observedCount(p.survivors, "n_out")
+        val mismatch = observedCount(p.quality, "month_mismatch")
+        val dropped = observedCount(p.groups, "n_groups") - outputRows
         Report(inputRows, outputRows, mismatch, dropped,
           mismatch + dropped, p.skipped, 0.0)
     }

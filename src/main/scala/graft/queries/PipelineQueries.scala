@@ -67,7 +67,7 @@ object PipelineQueries {
     * Why the wm CTE is over NON-CLICKS ONLY (r13 ADVICE adjudicated by
     * measurement): batch 2's late filter is the watermark derived from
     * batch 0's data alone — batches 0..N−2, the two-batch lag — NOT
-    * the max over batches 0 and 1. tools/WatermarkLagProbe separates
+    * the max over batches 0 and 1. WatermarkLagProbe @ c5f0dcc separates
     * the two candidates by 4 days and the probe row is KEPT; the
     * "late filter ... batches 0..N-2" StreamingSpec fixture pins it.
     */

@@ -38,7 +38,7 @@ object RelationalQueries {
     * (non-ANSI, this session's default) or throws (ANSI) — so past
     * ~2× of 100 TB, or for product terms (whose result precision
     * exceeds 18 regardless of input width), use `m` — q1 measured
-    * ~0.4 s faster at sf0.1 with the narrow base-price sum (Q1Probe,
+    * ~0.4 s faster at sf0.1 with the narrow base-price sum (Q1Probe @ c5f0dcc,
     * SCALE_NOTES).
     */
   private def mNarrow(c: Column): Column = c.cast(DecimalType(8, 2))
@@ -60,7 +60,7 @@ object RelationalQueries {
     * work"): q1's wall was ONE task — the single-row-group scan fuses
     * with the partial aggregate, and the partial aggregate did ALL the
     * money arithmetic through BigDecimal (3 Decimal multiplies + a
-    * double→Decimal cast per row; Q1Probe: the same agg over plain
+    * double→Decimal cast per row; Q1Probe @ c5f0dcc: the same agg over plain
     * doubles costs 0.22 s vs 1.04 s). Reformulated as EXACT integer
     * cents: round(x·100) longs, products as long multiplies, and every
     * money sum split into TWO primitive long sums (value div 1e6,
@@ -68,7 +68,7 @@ object RelationalQueries {
     * longs — recombined and divided ONCE per group in DECIMAL(38),
     * where the arithmetic is exact and the final DOUBLE cast is the
     * same single correctly-rounded conversion the decimal form
-    * produced. Value-identical (Q1ParProbe asserts cell-for-cell
+    * produced. Value-identical (Q1ParProbe @ c5f0dcc asserts cell-for-cell
     * double equality vs the decimal form; oracle unchanged).
     *
     * Rounding exactness: the data is 2-decimal; for x < 1e6 with two

@@ -49,7 +49,7 @@ object SimilarityQueries {
     * projected L2 via TakeOrderedAndProject, exact quantized re-rank.
     * This corpus is the JL-ADVERSARIAL case (Gaussian background —
     * pairwise distances concentrate, so projected rank ≈ noise;
-    * RpProbe: complete top-20 recall would need C ≈ 60-70% of the
+    * RpProbe @ c5f0dcc: complete top-20 recall would need C ≈ 60-70% of the
     * corpus even at 48 projections), so unlike LSH/IVF the declared
     * contract is NOT exact-top-k equality: the oracle REPLAYS the
     * whole pipeline — md5-parity signs, integer projections, the
@@ -451,7 +451,8 @@ object SimilarityQueries {
     * the exact top-k and shares its oracle. The weak pruning is the
     * corpus geometry, not the operator: Gaussian background scatters a
     * query's neighbours across cells (IVF pays off on clustered data —
-    * the 1M-vector SimBench probe reaches recall 0.97 at nProbe 4/64).
+    * the 1M-vector SimBench @ c5f0dcc probe reaches recall 0.97 at
+    * nProbe 4/64).
     */
   private val qIvf = QueryDef(
     "q_ann_ivf_topk",
@@ -520,7 +521,7 @@ object SimilarityQueries {
     * and it has a measured price: cells drawn from 3/4 of the corpus
     * concentrate the query's true neighbours slightly less, so exact
     * recovery needs nProbe = 14/16 where the full-trained index needs
-    * 13 (IvfAppendProbe: 19/20 at 13, 20/20 at 14; a 10% append is
+    * 13 (IvfAppendProbe @ c5f0dcc: 19/20 at 13, 20/20 at 14; a 10% append is
     * exact at 13). Partition pruning still skips 2 of 16 cells.
     */
   private val qIvfAppended = QueryDef(
@@ -541,8 +542,8 @@ object SimilarityQueries {
       // thin-cell guard (autoNProbe): the appended index's centroids
       // saw only 3/4 of the corpus, and at sf0.001's ~31 vectors/cell
       // even nProbe=15 missed one of the exact top-20 on regenerated
-      // testdata (round-6 IvfAppendProbe) — probe everything below the
-      // density floor, prune (14/16, measured complete) above it
+      // testdata (round-6 IvfAppendProbe @ c5f0dcc) — probe everything below
+      // the density floor, prune (14/16, measured complete) above it
       val nProbe = Similarity.autoNProbe(emb.count(), 16, base = 14)
       Similarity.ivfSearchVec(index, "vec_id", "embedding", qvec,
         k = 20, nProbe = nProbe, excludeId = Some(0L))
@@ -946,7 +947,7 @@ object SimilarityQueries {
     * scan, then ONLY those rows' full vectors are point-read from the
     * base table (id pushdown) and re-ranked by exact quantized
     * squared-L2. This is the rung that restores recall when true
-    * neighbor gaps sit below 8-byte PQ resolution (IvfPqScaleProbe:
+    * neighbor gaps sit below 8-byte PQ resolution (IvfPqScaleProbe @ c5f0dcc:
     * recall@20 0.03 → with refine — see SCALE_NOTES round 9). The
     * oracle replays the full pipeline INCLUDING the deterministic
     * shortlist cut and the exact re-rank.
@@ -1542,8 +1543,8 @@ object SimilarityQueries {
     "q_mips_topk",
     // minSpread = 0: the exhibit pins the LADDER + pushed-In point-read
     // plan shape (PlanSpec). This Gaussian corpus would otherwise take
-    // the concentration-guard brute path (MipsProbe) — correct serving
-    // config, but then no declared query would exercise the rungs.
+    // the concentration-guard brute path (MipsProbe @ c5f0dcc) — correct
+    // serving config, but then no declared query would exercise the rungs.
     (s, d) => graft.sim.Similarity.mipsTopKNormPruned(
       Tables.embeddings(s, d), "vec_id", "embedding", queryId = 0L, k = 20,
       minSpread = 0.0),

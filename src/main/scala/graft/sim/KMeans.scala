@@ -96,7 +96,7 @@ object KMeans {
     // (no group-scoring overhead); at IVF-scale cell counts the
     // blocked kernel's triangle-inequality pruning takes over —
     // identical results (exact bounds, same first-index tie rule),
-    // measured crossover region around k ≈ 128–256 (KMeansProbe)
+    // measured crossover region around k ≈ 128–256 (KMeansProbe @ c5f0dcc)
     val k = cents.ids.size
     val nearest =
       if (k >= 256)

@@ -292,7 +292,7 @@ object ProductQuantizer {
     * IVF+PQ deployment runs (FAISS's IndexRefineFlat): PQ codes rank
     * candidates, but within a tight cluster the true neighbor gaps are
     * smaller than 8-byte quantization error, so ADC ties and recall
-    * collapses (IvfPqScaleProbe measured recall@20 ≈ 0.03 on planted-
+    * collapses (IvfPqScaleProbe @ c5f0dcc measured recall@20 ≈ 0.03 on planted-
     * cluster vectors — ~20/cluster-size, i.e. arbitrary). The fix:
     * take the ADC top `k × refine` shortlist (deterministic — (adc,
     * id) total order), fetch ONLY those rows' full vectors from the
@@ -331,9 +331,9 @@ object ProductQuantizer {
 
   /** [[ivfPqSearchRefined]] with an ADAPTIVE shortlist: the fixed
     * refine factor is blind to ADC resolution — when one planted
-    * cluster swamps quantization error (IvfPqScaleProbe's 1000-member
-    * rung), the true top-k sit in an ADC-tied band far wider than
-    * k×refine and the shortlist cut truncates it (measured recall@20
+    * cluster swamps quantization error (the 1000-member rung of
+    * IvfPqScaleProbe @ c5f0dcc), the true top-k sit in an ADC-tied band far
+    * wider than k×refine and the shortlist cut truncates it (measured recall@20
     * 0.36 at refine=10).
     *
     * Growth rule — STABILIZATION, not an adc/d2 comparison (ADC

@@ -838,7 +838,7 @@ object Similarity {
   /** [[mipsTopKNormPruned]] plus the ladder's exit state for probes:
     * (result, final factor, candidates scanned, stop reason).
     *
-    * CONCENTRATION GUARD (MipsProbe finding): on iid-component
+    * CONCENTRATION GUARD (MipsProbe @ c5f0dcc finding): on iid-component
     * corpora norms concentrate (relative spread ~1/√d), the
     * Cauchy–Schwarz ceiling barely decays down the ladder, and the
     * ladder death-marches to exhaustion — measured 14.96 s vs 0.27 s
@@ -853,7 +853,7 @@ object Similarity {
     * build once, store/persist, and pass back in for serve-path reads
     * (otherwise every ladder rung recomputes norms corpus-wide: the
     * build pass costs one full scan, same as brute, so in-query
-    * pruning only wins when the index already exists — MipsProbe
+    * pruning only wins when the index already exists — MipsProbe @ c5f0dcc
     * measures both regimes).
     */
   def mipsNormIndex(df: DataFrame, idCol: String,

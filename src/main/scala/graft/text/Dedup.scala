@@ -141,7 +141,7 @@ object Dedup {
     * The map-side form's follow-up aggregates use map-side partials, so
     * the first exchange in the family carries ids × signature longs,
     * not corpus bytes. We keep the map-side form; hash-first and
-    * transform-HOF variants measured no better (MinhashABProbe).
+    * transform-HOF variants measured no better (MinhashABProbe @ c5f0dcc).
     */
   def shingleHashFrame(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, distinctShingles: Boolean = true): DataFrame = {
@@ -179,34 +179,6 @@ object Dedup {
       .agg(
         min(xxhash64(lit(0), col("s"))).as("mh_0"),
         (1 until k).map(i => min(xxhash64(lit(i), col("s"))).as(s"mh_$i")): _*)
-
-  /** LSH candidate pairs from minhash signatures: b bands of r values;
-    * band hash = xxhash64 over the band's signature columns; explode →
-    * (band, hash) buckets → within-bucket pairs via self-join.
-    */
-  /** Band-bucket candidate pairs from a signature frame (id, mh_*). */
-  private def candidatesFromSignatures(sig: DataFrame, numHashes: Int,
-      bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    val bandCols = (0 until bands).map { b =>
-      xxhash64((b * r until (b + 1) * r).map(i => col(s"mh_$i")): _*)
-    }
-    val banded = sig.select(col("id"), posexplode(array(bandCols: _*)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-        col("a.band_hash") === col("b.band_hash") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-  }
-
-  def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8): DataFrame =
-    candidatesFromSignatures(
-      minhashSignatures(df, idCol, textCol, shingleN, numHashes),
-      numHashes, bands)
 
   /** MinHash-LSH near-dup pairs: banding proposes candidates, the
     * signature-match fraction (the standard minhash Jaccard estimator)
@@ -272,7 +244,7 @@ object Dedup {
       // recomputes the subplan" objection), the self-join moves 24 B
       // (id, band, hash) rows, and the signatures re-attach to the
       // DEDUPED pair set via two broadcast joins — map-side, no pair
-      // amplification. Measured (tools/MinhashBandProbe, interleaved
+      // amplification. Measured (MinhashBandProbe @ c5f0dcc, interleaved
       // ×7, identity-asserted over 256 pairs at sf0.1):
       // wide 1.533 s → narrow 1.257 s median. Past the cap the wide
       // shape returns: a corpus-sized signature pin/broadcast is
@@ -638,7 +610,7 @@ object Dedup {
     * of id pairs, so AQE's byte-based coalescing ran the whole verify
     * (two set joins + array_intersect per pair) 3-wide — 3.7 s of task
     * time in one stage at sf0.1 on q_jaccard_prefix_join's ~130k
-    * candidates (StageBreakdown). The set tables broadcast (their
+    * candidates (StageBreakdown @ c5f0dcc). The set tables broadcast (their
     * builds are separate tiny stages), so a round-robin repartition at
     * the planner's width survives through both map-side joins and
     * restores full fan-out. Callers with FEW candidates (minhash's
@@ -873,8 +845,6 @@ object Dedup {
         case null => 0L
         case x => x.asInstanceOf[Long]
       }
-      if (sys.env.contains("GRAFT_CLUSTER_DEBUG"))
-        System.err.println(s"[cluster] iter=$i changed=$changed")
       labels = next
       converged = changed == 0
       i += 1

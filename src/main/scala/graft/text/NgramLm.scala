@@ -82,8 +82,8 @@ object NgramLm {
     * a shuffle join — the FuzzyJoin verify-side pattern. Natural
     * language obeys Heaps' law (bigram vocabulary grows ~n^0.8 of the
     * TRUSTED slice, not the corpus), so real models stay under this;
-    * the LmProbe synthetic uniform corpus is the adversarial case that
-    * crosses it.
+    * the LmProbe @ c5f0dcc synthetic uniform corpus is the adversarial case
+    * that crosses it.
     */
   val BroadcastMaxBigrams = 2000000L
 
@@ -101,7 +101,7 @@ object NgramLm {
       else model.bigram
     // fanOut: the bigram explode + model lookups are the per-row-
     // expensive stage; a single-split file would run it on one core
-    // (AmplificationAudit caught 5.7 s/1-task at sf0.1)
+    // (AmplificationAudit @ c5f0dcc caught 5.7 s/1-task at sf0.1)
     // tokens MUST be projected before the bigram transform: an inline
     // tokens(...) inside the lambda re-runs the regex split for every
     // element_at — 2 splits per bigram (measured 14x on collocations,

@@ -176,21 +176,6 @@ object TextFunctions {
           sequence(lit(0), size(t) - n),
           i => concat_ws(" ", (0 until n).map(k => element_at(t, i + k + 1)): _*))))
 
-  /** Word n-gram shingles as 64-bit hashes (distinct): the unit for
-    * MinHash signatures, where the shingle string itself is never
-    * needed — skipping the concat + string comparisons roughly halves
-    * shingle-stage cost. Collision odds across 64 bits are negligible
-    * for any realistic shingle population.
-    */
-  def wordShingleHashes(text: Column, n: Int = 3): Column = {
-    val t = tokens(text)
-    array_distinct(
-      when(size(t) < n, array().cast("array<bigint>"))
-        .otherwise(transform(
-          sequence(lit(0), size(t) - n),
-          i => xxhash64((0 until n).map(k => element_at(t, i + k + 1)): _*))))
-  }
-
   /** Order-sensitive rolling fingerprint of the token stream: fold of
     * xxhash64(acc, token) — a chained hash rather than a polynomial, so
     * it needs no wrapping multiply (Spark 4 runs ANSI mode; `*` on
@@ -426,7 +411,8 @@ object TextFunctions {
     *     the one-merge-at-a-time loop, at up to batchSize merges per
     *     ~3 Spark jobs — including on flat/all-tied counts, where the
     *     former no-shared-symbol rule degraded to 1 merge/round-trip
-    *     (BpeProbe's flat-tie row measures the repaired shape).
+    *     (the flat-tie row of BpeProbe @ c5f0dcc measures the repaired
+    *     shape).
     *
     * Returns (round, merge_left, merge_right, n) — the learned merge
     * table, `rounds` rows; `n` is the pair's corpus count AT ITS OWN
@@ -492,10 +478,6 @@ object TextFunctions {
       cN > pN || (cN == pN &&
         (utf8Lt(cL, pL) || (cL == pL && utf8Lt(cR, pR))))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    // waypoint telemetry for the production-depth s/merge curve
-    // (BpeProbe reads these stderr lines; zero cost in the loop)
-    val trainT0 = System.nanoTime()
-    var nextWaypoint = 1000
     while (merges.size < rounds) {
       val want = math.min(batchSize, rounds - merges.size)
       val cands = pairCounts
@@ -646,11 +628,6 @@ object TextFunctions {
         .localCheckpoint(true)
       kept.zip(stepCounts).foreach { case ((l, r, _), nStep) =>
         merges += ((merges.size + 1, l, r, nStep)) }
-      if (merges.size >= nextWaypoint) {
-        System.err.println(f"[bpe-train] waypoint merges=${merges.size}%d " +
-          f"elapsed_sec=${(System.nanoTime() - trainT0) / 1e9}%.1f")
-        while (nextWaypoint <= merges.size) nextWaypoint += 1000
-      }
     }
     import spark.implicits._
     merges.toSeq.toDF("round", "merge_left", "merge_right", "n")
@@ -671,8 +648,8 @@ object TextFunctions {
     // pays one in-place array pass per merge. The earlier
     // aggregate-HOF formulation had the same O(merges * len) bound but
     // evaluated interpreted AND rebuilt the fenced string once per
-    // merge (BpeProbe measured the gap at 1000 merges). Fold semantics
-    // are bit-identical (rank order, greedy L2R non-overlapping per
+    // merge (BpeProbe @ c5f0dcc measured the gap at 1000 merges). Fold
+    // semantics are bit-identical (rank order, greedy L2R non-overlapping per
     // pass) -- pinned by the randomized reference tests and the
     // q_bpe_encode_vocab oracle. No fence-char contract on encode:
     // symbols are array elements, nothing to corrupt.

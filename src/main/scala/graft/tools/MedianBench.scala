@@ -3,7 +3,7 @@ package graft.tools
 import graft.Session
 
 /** Median-of-3 yardstick for the slow non-headline bench queries (r13
-  * verdict #5, extending the TriangleProfile treatment to the whole
+  * verdict #5, extending the TriangleProfile @ c5f0dcc treatment to the whole
   * >2 s tail). BENCH_r{N}.json publishes single/min draws; on this
   * time-shared box those swing ±20–50% on unchanged code (r13's
   * triangles −27% / clustering +17% with a byte-identical wedge join).

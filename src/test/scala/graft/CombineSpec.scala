@@ -34,7 +34,8 @@ class CombineSpec extends AnyFunSuite {
     val t = Seq(
       ("yellow", d, "A", 30L), ("yellow", d, "B", 60L))
       .toDF("taxi_type", "date", "pickup_place", "hour_0")
-    val out = Combine.combineWideTables(Seq(t), minRides = Some(50L)).get
+    val out = Combine.combineWideTables(Seq(t)).get
+      .where(HourPivot.hourCols.map(col).reduce(_ + _) >= 50L)
     assert(out.select("pickup_place").as[String].collect().toSeq == Seq("B"))
   }
 }

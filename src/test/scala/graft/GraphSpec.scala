@@ -140,7 +140,8 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(outB == out)
     // r16 closure-broadcast rung (cluster knob, default 0 = shuffled —
-    // measured faster locally, TriangleClosureProbe): identical counts
+    // measured faster locally, TriangleClosureProbe @ c5f0dcc): identical
+    // counts
     spark.conf.set("spark.graft.graph.maxBroadcastClosureEdges", "1000000")
     try {
       val outC = Graph.triangleCounts(edges, nodes, "id")

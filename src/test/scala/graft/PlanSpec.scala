@@ -553,8 +553,8 @@ class PlanSpec extends AnyFunSuite {
     assert(globalWindows.isEmpty,
       s"expected only __pid-partitioned windows:\n${globalWindows.mkString("\n")}")
     // the |keys|-sized counts frame IS pinned — five passes consume it
-    // and must not recompute the corpus aggregation (SkewProbe: 15.1 s
-    // unpinned vs 4.5 s pinned at 50M events)
+    // and must not recompute the corpus aggregation
+    // (SkewProbe @ c5f0dcc: 15.1 s unpinned vs 4.5 s pinned at 50M events)
     assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"),
       s"counts frame not pinned:\n$p")
   }
@@ -829,7 +829,15 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("drift timeseries: eval-day range join broadcasts the tiny frame") {
-    val p = planString("q_ks_drift_timeseries")
+    // q_ks_drift_timeseries pins its counts frame for the domain guard,
+    // so the join runs inside the pin's job and the query's executed
+    // plan shows only the pinned LogicalRDD. domainCap = 0 builds the
+    // identical joined frame without the pin: its plan holds the join.
+    import org.apache.spark.sql.functions.{col, to_date}
+    val ev = graft.sources.Tables.events(spark, sf)
+    val p = graft.ops.Profiling.ksDriftTimeseries(ev, Seq("event_type"),
+      col("value"), to_date(col("ts")), refDays = 7, curDays = 7,
+      domainCap = 0).queryExecution.executedPlan.toString
     // the day-range theta join must put the ~days-sized eval frame on
     // a broadcast build side; a shuffle or cartesian here would move
     // the corpus-sized distribution frame for a <100-row dimension

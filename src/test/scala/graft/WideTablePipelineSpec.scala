@@ -130,8 +130,12 @@ class WideTablePipelineSpec extends AnyFunSuite {
   }
 
   test("incremental per-month mode produces the same wide table as single-plan") {
+    import spark.implicits._
     val in = tmpDir(); val out1 = tmpDir(); val out2 = tmpDir()
     writeFixtures(in)
+    // a zero-row file alone in its month: its observations carry no row
+    Seq.empty[(Timestamp, Int)].toDF("tpep_pickup_datetime", "PULocationID")
+      .coalesce(1).write.parquet(s"$in/yellow_tripdata_2020-05.parquet")
     val full = WideTablePipeline.run(spark,
       WideTablePipeline.Config(in, out1, minRides = 50L))
     val incr = WideTablePipeline.runIncremental(spark,
@@ -144,9 +148,12 @@ class WideTablePipelineSpec extends AnyFunSuite {
     assert(incr.inputRowCount == full.inputRowCount)
     assert(incr.monthMismatchRows == full.monthMismatchRows)
     assert(incr.outputRowCount == full.outputRowCount)
+    assert(incr.lowCountDropped == full.lowCountDropped)
+    assert(incr.badRowsIgnored == full.badRowsIgnored)
+    assert(incr.skippedFiles.map(_._1).toSet == full.skippedFiles.map(_._1).toSet)
     // monthly intermediates exist per month key
     assert(new java.io.File(s"$out2/monthly").list().toSeq.sorted ==
-      Seq("2009-03", "2021-06", "2023-01"))
+      Seq("2009-03", "2020-05", "2021-06", "2023-01"))
   }
 
   test("corrupt parquet file is skipped with a reason, pipeline continues") {
@@ -171,16 +178,19 @@ class WideTablePipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val in = tmpDir(); val out = tmpDir()
     val base = Timestamp.valueOf("2022-04-05 09:00:00").getTime
-    (1 to 60).map(i => (base + i * 1000L, 132.0))
+    // 3 NaN ids ride along: a missing location, not a cast overflow
+    ((1 to 60).map(i => (base + i * 1000L, 132.0)) ++
+      (1 to 3).map(i => (base + i * 1000L, Double.NaN)))
       .toDF("request_datetime", "PUlocationID")
       .coalesce(1).write.parquet(s"$in/fhv_tripdata_2022-04.parquet")
-    WideTablePipeline.run(spark,
+    val report = WideTablePipeline.run(spark,
       WideTablePipeline.Config(in, out, minRides = 1L))
+    assert(report.inputRowCount == 63)
     val places = spark.read.parquet(s"$out/wide_table.parquet")
-      .select("pickup_place").as[String].collect().toSeq
+      .select("pickup_place").as[String].collect().toSet
     // pinned spec (SURVEY §7.4 risk 1): numeric ids cast via LONG, so
-    // the key is "132", never pandas-style "132.0"
-    assert(places == Seq("132"))
+    // the key is "132", never pandas-style "132.0"; NaN ids are NULL
+    assert(places == Set("132", null))
   }
 
   test("unparseable datetime strings coerce to null and are dropped, not fatal") {
